@@ -20,53 +20,66 @@ default (the correct relational answer) and provide
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import MapType, StringType
+from pyspark.sql.types import DataType, LongType, MapType, StringType
 
-from ..transport.resp import RedisClient
+from ..transport.resp import DEFAULT_SCAN_COUNT, RedisClient
 
-# Keys per MGET pipeline call; Arrow batches are typically 10k rows, and a
+# Keys per fetch round trip; Arrow batches are typically 10k rows, and a
 # single MGET of that size is one round trip — chunk to bound reply size.
-MGET_CHUNK = 2048
+MGET_CHUNK = DEFAULT_SCAN_COUNT
+
+
+def _per_key_udf(
+    host: str,
+    port: int,
+    fetch: Callable[[RedisClient, list[str]], list],
+    return_type: DataType,
+    dtype: str,
+):
+    """An Arrow-vectorized UDF named after ``fetch``: one connection per
+    executor partition (lazy, inside the iterator — sockets never
+    pickle), each batch cut into ``MGET_CHUNK``-key chunks and one
+    ``fetch(client, keys)`` round trip per chunk. SQL null-in →
+    null-out: a NULL key is NOT the legal Redis key "" (substituting ""
+    returned that key's value, or conflated NULL with missing — r14
+    review), so NULL positions never reach the wire and stay NULL."""
+
+    def per_key(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        with RedisClient(host, port) as client:
+            for keys in batches:
+                kl = keys.tolist()
+                out: list = [None] * len(kl)
+                for i in range(0, len(kl), MGET_CHUNK):
+                    idx = [
+                        j for j in range(i, min(i + MGET_CHUNK, len(kl)))
+                        if kl[j] is not None
+                    ]
+                    if idx:
+                        for j, v in zip(idx, fetch(client, [kl[j] for j in idx])):
+                            out[j] = v
+                yield pd.Series(out, dtype=dtype)
+
+    per_key.__name__ = fetch.__name__  # the SQL column name
+    return pandas_udf(per_key, return_type)
 
 
 def make_redis_get(host: str, port: int, missing: str = "null"):
-    """Build a ``redis_get(col) -> string`` Arrow-vectorized UDF.
-
-    One connection per executor partition (lazy, inside the iterator —
-    sockets never pickle), one MGET round trip per chunk.
-    """
+    """Build a ``redis_get(col) -> string`` Arrow-vectorized UDF: one
+    MGET round trip per chunk. ``missing="empty"`` maps missing KEYS
+    (not NULL keys) to ""."""
     fill_empty = missing == "empty"
 
-    @pandas_udf(StringType())
-    def redis_get(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        with RedisClient(host, port) as client:
-            for keys in batches:
-                out: list[str | None] = []
-                kl = keys.tolist()
-                for i in range(0, len(kl), MGET_CHUNK):
-                    chunk = kl[i : i + MGET_CHUNK]
-                    # SQL null-in → null-out: a NULL key is NOT the
-                    # legal Redis key "" (substituting "" returned that
-                    # key's value / conflated NULL with missing — r14
-                    # review). NULL positions never reach the wire;
-                    # missing="empty" applies to missing KEYS only.
-                    idx = [j for j, k in enumerate(chunk) if k is not None]
-                    fetched = (
-                        client.mget([chunk[j] for j in idx]) if idx else []
-                    )
-                    vals: list[str | None] = [None] * len(chunk)
-                    for j, v in zip(idx, fetched):
-                        vals[j] = v if v is not None or not fill_empty else ""
-                    out.extend(vals)
-                yield pd.Series(out, dtype="object")
+    def redis_get(client: RedisClient, keys: list[str]) -> list:
+        values = client.mget(keys)
+        return ["" if v is None else v for v in values] if fill_empty else values
 
-    return redis_get
+    return _per_key_udf(host, port, redis_get, StringType(), "object")
 
 
 def make_redis_ttl(host: str, port: int):
@@ -74,42 +87,18 @@ def make_redis_ttl(host: str, port: int):
     LongType surface SURVEY §3 reserved for the RESP integer type
     (the reference parses ``:`` replies but never exposes one to SQL).
     Redis semantics pass through untouched: seconds remaining, ``-1``
-    for a key with no expiry, ``-2`` for a missing key. One connection
-    per executor partition, one pipelined round trip per chunk."""
+    for a key with no expiry, ``-2`` for a missing key; TTL(NULL) is
+    NULL. One pipelined round trip per chunk."""
 
-    from pyspark.sql.types import LongType
+    def redis_ttl(client: RedisClient, keys: list[str]) -> list:
+        # pipeline_checked: TTL never errors on a live standalone node,
+        # but a cluster reshard answers -MOVED — replayed on the
+        # target; anything else raises instead of crashing int()
+        # opaquely.
+        return [int(r) for r in client.pipeline_checked([("TTL", k) for k in keys])]
 
-    @pandas_udf(LongType())
-    def redis_ttl(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        with RedisClient(host, port) as client:
-            for keys in batches:
-                kl = keys.tolist()
-                out: list[int | None] = []
-                for i in range(0, len(kl), MGET_CHUNK):
-                    chunk = kl[i : i + MGET_CHUNK]
-                    # SQL null-in → null-out: TTL(NULL) is NULL, not
-                    # the -2 of a missing key (and never the TTL of
-                    # the legal key "" — r14 review).
-                    idx = [j for j, k in enumerate(chunk) if k is not None]
-                    # pipeline_checked: TTL never errors on a live
-                    # standalone node, but a cluster reshard answers
-                    # -MOVED — replayed on the target; anything else
-                    # raises instead of crashing int() opaquely.
-                    replies = (
-                        client.pipeline_checked(
-                            [("TTL", chunk[j]) for j in idx]
-                        )
-                        if idx
-                        else []
-                    )
-                    vals: list[int | None] = [None] * len(chunk)
-                    for j, r in zip(idx, replies):
-                        vals[j] = int(r)
-                    out.extend(vals)
-                # pandas nullable Int64 → Arrow int64 with nulls
-                yield pd.Series(out, dtype="Int64")
-
-    return redis_ttl
+    # pandas nullable Int64 → Arrow int64 with nulls
+    return _per_key_udf(host, port, redis_ttl, LongType(), "Int64")
 
 
 def make_redis_hgetall(host: str, port: int):
@@ -117,32 +106,15 @@ def make_redis_hgetall(host: str, port: int):
 
     The reference documents this as returning a STRUCT (``README.md:36-38``)
     but never implements it; MapType is the schema-free Spark analogue.
+    A NULL key is NULL, not the {} of a missing key.
     """
 
-    @pandas_udf(MapType(StringType(), StringType()))
-    def redis_hgetall(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        with RedisClient(host, port) as client:
-            for keys in batches:
-                kl = keys.tolist()
-                maps: list[dict | None] = []
-                for i in range(0, len(kl), MGET_CHUNK):
-                    chunk = kl[i : i + MGET_CHUNK]
-                    # SQL null-in → null-out (not the {} of a missing
-                    # key, and never the hash at the legal key "" —
-                    # r14 review)
-                    idx = [j for j, k in enumerate(chunk) if k is not None]
-                    fetched = (
-                        client.hgetall_pipelined([chunk[j] for j in idx])
-                        if idx
-                        else []
-                    )
-                    vals: list[dict | None] = [None] * len(chunk)
-                    for j, m in zip(idx, fetched):
-                        vals[j] = m
-                    maps.extend(vals)
-                yield pd.Series(maps, dtype="object")
+    def redis_hgetall(client: RedisClient, keys: list[str]) -> list:
+        return client.hgetall_pipelined(keys)
 
-    return redis_hgetall
+    return _per_key_udf(
+        host, port, redis_hgetall, MapType(StringType(), StringType()), "object"
+    )
 
 
 def redduck(name: Column | str) -> Column:

@@ -507,9 +507,11 @@ def _referenced_pkg_callables(fn) -> frozenset:
             # methods are walked for further references — this is how
             # entries reach Engine and (through ALL_DATASOURCES) the
             # DataSource/Reader classes behind string format names.
+            # Package base classes are walked too: an inherited method
+            # (a shared reader or writer loop) is code the entry runs.
             if in_pkg(f):
                 out.add(f)
-                for v in vars(f).values():
+                for v in (*vars(f).values(), *f.__bases__):
                     push(v)
             continue
         code = getattr(f, "__code__", None)

@@ -58,7 +58,7 @@ Python-object row conversion.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql.datasource import (
@@ -188,9 +188,13 @@ def _cluster_nodes(
     ]
 
 
+def _endpoint(options: dict) -> tuple[str, int]:
+    """The ``host`` / ``port`` options, default 127.0.0.1:6379."""
+    return options.get("host", "127.0.0.1"), int(options.get("port", 6379))
+
+
 def _shards(options: dict) -> list[RedisShard]:
-    host = options.get("host", "127.0.0.1")
-    port = int(options.get("port", 6379))
+    host, port = _endpoint(options)
     count = int(options.get("count", DEFAULT_SCAN_COUNT))
     shard_patterns = options.get("shard_patterns")
     if shard_patterns:
@@ -237,10 +241,26 @@ def _scan_owned(client: RedisClient, part: RedisShard) -> Iterator[list[str]]:
             yield keys
 
 
-class RedisScanReader(DataSourceReader):
+class _ScanReader(DataSourceReader):
+    """A scan-family reader: one partition per shard (:func:`_shards`),
+    one RecordBatch per SCAN page, built from the page's keys by the
+    subclass's ``_batch(client, keys)``."""
+
+    protocol = 2
+
     def __init__(self, options: dict) -> None:
         self.options = options
 
+    def partitions(self) -> list[InputPartition]:
+        return _shards(self.options)
+
+    def read(self, part: RedisShard) -> Iterator[pa.RecordBatch]:
+        with RedisClient(part.host, part.port, protocol=self.protocol) as client:
+            for keys in _scan_owned(client, part):
+                yield self._batch(client, keys)
+
+
+class RedisScanReader(_ScanReader):
     def pushFilters(self, filters: list[Filter]) -> Iterable[Filter]:
         """LIKE→glob pushdown (SURVEY.md §4.2's optional nicety): a
         prefix/suffix/contains/equality predicate on key_name becomes the
@@ -282,13 +302,8 @@ class RedisScanReader(DataSourceReader):
         # ALL filters go back to Spark — the MATCH pattern only prunes.
         return filters
 
-    def partitions(self) -> list[InputPartition]:
-        return _shards(self.options)
-
-    def read(self, part: RedisShard) -> Iterator[pa.RecordBatch]:
-        with RedisClient(part.host, part.port) as client:
-            for keys in _scan_owned(client, part):
-                yield pa.RecordBatch.from_pydict({"key_name": keys})
+    def _batch(self, client: RedisClient, keys: list[str]) -> pa.RecordBatch:
+        return pa.RecordBatch.from_pydict({"key_name": keys})
 
 
 class RedisScanDataSource(DataSource):
@@ -307,55 +322,56 @@ class RedisScanDataSource(DataSource):
         return RedisScanReader(self.options)
 
 
-class RedisKVReader(DataSourceReader):
+class RedisKVReader(_ScanReader):
+    def _batch(self, client: RedisClient, keys: list[str]) -> pa.RecordBatch:
+        values = client.mget(keys)  # one round trip per SCAN batch
+        return pa.RecordBatch.from_pydict({"key": keys, "value": values})
+
+
+class _PipelinedWriter:
+    """The batch sink every Redis writer shares: one connection per
+    partition, the subclass's ``_commands(rows)`` sent in pipelines of
+    ``batch_size`` commands (one round trip each) — the write-side
+    mirror of the read path's SCAN pages. ``pipeline_checked`` replays
+    MOVED/ASK replies on their target and raises on any other error
+    reply, failing the task rather than reporting a phantom success."""
+
     def __init__(self, options: dict) -> None:
-        self.options = options
+        self.host, self.port = _endpoint(options)
+        self.batch_size = int(options.get("batch_size", DEFAULT_SCAN_COUNT))
 
-    def partitions(self) -> list[InputPartition]:
-        return _shards(self.options)
+    def write(self, rows) -> WriterCommitMessage:
+        with RedisClient(self.host, self.port) as client:
+            batch: list[tuple] = []
+            for cmd in self._commands(rows):
+                batch.append(cmd)
+                if len(batch) >= self.batch_size:
+                    client.pipeline_checked(batch)
+                    batch = []
+            if batch:
+                client.pipeline_checked(batch)
+        return WriterCommitMessage()
 
-    def read(self, part: RedisShard) -> Iterator[pa.RecordBatch]:
-        with RedisClient(part.host, part.port) as client:
-            for keys in _scan_owned(client, part):
-                values = client.mget(keys)  # one round trip per SCAN batch
-                yield pa.RecordBatch.from_pydict({"key": keys, "value": values})
 
-
-class RedisKVWriter(DataSourceWriter):
+class RedisKVWriter(_PipelinedWriter, DataSourceWriter):
     """Batch writer: each partition pipelines SET commands (one round
     trip per ``batch_size`` rows) — the write-side mirror of the MGET
     batching on the read path. The reference is read-only
     (``README.md:49``); this completes the source/sink symmetry."""
 
-    def __init__(self, options: dict) -> None:
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options.get("port", 6379))
-        self.batch_size = int(options.get("batch_size", DEFAULT_SCAN_COUNT))
-
-    def write(self, rows) -> WriterCommitMessage:
-        n = 0
-        with RedisClient(self.host, self.port) as client:
-            batch: list[tuple] = []
-            for row in rows:
-                if row.key is None or row.value is None:
-                    # Redis has no NULL string; str() fallback would
-                    # store the literal "None" (r14 bug-hunt). Fail
-                    # the task with actionable wording instead.
-                    raise ValueError(
-                        "redis_kv write: NULL "
-                        + ("key" if row.key is None else
-                           f"value for key {row.key!r}")
-                        + " — filter or fill NULLs before writing"
-                    )
-                batch.append(("SET", row.key, row.value))
-                if len(batch) >= self.batch_size:
-                    client.pipeline_checked(batch)
-                    n += len(batch)
-                    batch = []
-            if batch:
-                client.pipeline_checked(batch)
-                n += len(batch)
-        return WriterCommitMessage()
+    def _commands(self, rows) -> Iterator[tuple]:
+        for row in rows:
+            if row.key is None or row.value is None:
+                # Redis has no NULL string; str() fallback would
+                # store the literal "None" (r14 bug-hunt). Fail
+                # the task with actionable wording instead.
+                raise ValueError(
+                    "redis_kv write: NULL "
+                    + ("key" if row.key is None else
+                       f"value for key {row.key!r}")
+                    + " — filter or fill NULLs before writing"
+                )
+            yield ("SET", row.key, row.value)
 
 
 class RedisKVDataSource(DataSource):
@@ -389,9 +405,9 @@ _HASH_ARROW_SCHEMA = pa.schema(
 )
 
 
-class RedisHashReader(DataSourceReader):
+class RedisHashReader(_ScanReader):
     def __init__(self, options: dict) -> None:
-        self.options = options
+        super().__init__(options)
         # HGETALL is the one reply this engine consumes whose shape
         # changed in RESP3 (flat array -> % map), so the hash source
         # negotiates RESP3 by default and falls back to RESP2 against
@@ -399,21 +415,16 @@ class RedisHashReader(DataSourceReader):
         # protocol=2 to pin the legacy wire form.
         self.protocol = int(options.get("protocol", 3))
 
-    def partitions(self) -> list[InputPartition]:
-        return _shards(self.options)
-
-    def read(self, part: RedisShard) -> Iterator[pa.RecordBatch]:
-        with RedisClient(part.host, part.port, protocol=self.protocol) as client:
-            for keys in _scan_owned(client, part):
-                maps = client.hgetall_pipelined(keys)  # one RTT per batch
-                rows = [list(m.items()) for m in maps]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(keys, type=pa.string()),
-                        pa.array(rows, type=pa.map_(pa.string(), pa.string())),
-                    ],
-                    schema=_HASH_ARROW_SCHEMA,
-                )
+    def _batch(self, client: RedisClient, keys: list[str]) -> pa.RecordBatch:
+        maps = client.hgetall_pipelined(keys)  # one RTT per batch
+        rows = [list(m.items()) for m in maps]
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(keys, type=pa.string()),
+                pa.array(rows, type=pa.map_(pa.string(), pa.string())),
+            ],
+            schema=_HASH_ARROW_SCHEMA,
+        )
 
 
 class RedisHashDataSource(DataSource):
@@ -438,48 +449,36 @@ class RedisHashDataSource(DataSource):
         return RedisHashWriter(self.options)
 
 
-class RedisHashWriter(DataSourceWriter):
+class RedisHashWriter(_PipelinedWriter, DataSourceWriter):
     """Batch writer for (key, value map<string,string>) rows: each
     partition pipelines one HSET per row (fields flattened), batched
-    like the KV writer."""
+    like the KV writer. A row with an empty map sends nothing (HSET
+    needs a field)."""
 
-    def __init__(self, options: dict) -> None:
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options.get("port", 6379))
-        self.batch_size = int(options.get("batch_size", DEFAULT_SCAN_COUNT))
-
-    def write(self, rows) -> WriterCommitMessage:
-        with RedisClient(self.host, self.port) as client:
-            batch: list[tuple] = []
-            for row in rows:
-                if row.key is None:
-                    # checked per row, not per non-empty map: a NULL
-                    # key with an empty map is the same upstream
-                    # corruption and must fail just as loudly as in
-                    # the kv writer (review r14)
+    def _commands(self, rows) -> Iterator[tuple]:
+        for row in rows:
+            if row.key is None:
+                # checked per row, not per non-empty map: a NULL
+                # key with an empty map is the same upstream
+                # corruption and must fail just as loudly as in
+                # the kv writer (review r14)
+                raise ValueError(
+                    "redis_hash write: NULL key — filter or "
+                    "fill NULLs before writing"
+                )
+            flat: list = []
+            for f, v in (row.value or {}).items():
+                if f is None or v is None:
                     raise ValueError(
-                        "redis_hash write: NULL key — filter or "
-                        "fill NULLs before writing"
+                        "redis_hash write: NULL "
+                        + ("field" if f is None else
+                           f"value for field {f!r}")
+                        + f" in key {row.key!r} — Redis hashes "
+                        "have no NULL; filter or fill first"
                     )
-                flat: list = []
-                for f, v in (row.value or {}).items():
-                    if f is None or v is None:
-                        raise ValueError(
-                            "redis_hash write: NULL "
-                            + ("field" if f is None else
-                               f"value for field {f!r}")
-                            + f" in key {row.key!r} — Redis hashes "
-                            "have no NULL; filter or fill first"
-                        )
-                    flat += [f, v]
-                if flat:
-                    batch.append(("HSET", row.key, *flat))
-                if len(batch) >= self.batch_size:
-                    client.pipeline_checked(batch)
-                    batch = []
-            if batch:
-                client.pipeline_checked(batch)
-        return WriterCommitMessage()
+                flat += [f, v]
+            if flat:
+                yield ("HSET", row.key, *flat)
 
 
 # ---------------------------------------------------------------------------
@@ -493,14 +492,51 @@ class _SingleKeyPartition(InputPartition):
         self.host, self.port, self.key = host, port, key
 
 
-def _single_key_partition(options: dict) -> list[_SingleKeyPartition]:
-    return [
-        _SingleKeyPartition(
-            options.get("host", "127.0.0.1"),
-            int(options.get("port", 6379)),
-            options["key"],
-        )
-    ]
+class _PagedReader(DataSourceReader):
+    """Reads one container key in ``page_size`` index slices, one
+    RecordBatch per slice, so a huge container never buffers whole in
+    the worker. A key within one page by its length probe reads in a
+    single range command, keeping the exact-snapshot semantics (round-9
+    ADVICE); only a key that needs bounded-memory paging pays the
+    SCAN-like trade-off: elements added or removed mid-read may be
+    missed or shifted."""
+
+    def __init__(self, options: dict) -> None:
+        self.options = options
+        self.page_size = int(options.get("page_size", DEFAULT_SCAN_COUNT))
+        self.protocol = int(options.get("protocol", 3))
+
+    def partitions(self) -> list[InputPartition]:
+        return [_SingleKeyPartition(*_endpoint(self.options), self.options["key"])]
+
+    def _read_pages(
+        self,
+        part: _SingleKeyPartition,
+        probe: str,
+        range_cmd: tuple[str, ...],
+        build: Callable[[list, int], pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        """``probe`` gives the key's length; ``range_cmd`` is the
+        range command with its arguments after start/stop; ``build``
+        makes a page's batch from its reply and start index."""
+        page = max(1, self.page_size)
+        with RedisClient(
+            part.host, part.port, protocol=self.protocol
+        ) as client:
+            single_shot = int(client.command(probe, part.key) or 0) <= page
+            start = 0
+            while True:
+                stop = str(start + page - 1) if not single_shot else "-1"
+                reply = client.command(
+                    range_cmd[0], part.key, str(start), stop, *range_cmd[1:]
+                )
+                if not reply:
+                    return
+                batch = build(reply, start)
+                yield batch
+                start += batch.num_rows
+                if single_shot or batch.num_rows < page:
+                    return
 
 
 _ZSET_ARROW_SCHEMA = pa.schema(
@@ -512,84 +548,52 @@ _ZSET_ARROW_SCHEMA = pa.schema(
 )
 
 
-class RedisZSetReader(DataSourceReader):
+class RedisZSetReader(_PagedReader):
     """Paged ZRANGE WITHSCORES — the full sorted set in ascending
     (score, member) order, rank attached. One partition per key (a
     sorted set lives on one shard in any real deployment; multi-key
-    reads union several loads), but the read streams
-    ``DEFAULT_SCAN_COUNT``-sized index slices and yields one
-    RecordBatch per slice, so a multi-GB leaderboard never
-    materializes as one Python list in the worker (mirrors the
-    writers' pipelined batching). Like every SCAN-family reader here,
-    paging trades the single-command snapshot for bounded memory:
-    elements added/removed mid-read may be missed or shifted — the
-    same contract as SCAN itself."""
+    reads union several loads); pages as :class:`_PagedReader`.
 
-    def __init__(self, options: dict) -> None:
-        self.options = options
-        self.page_size = int(options.get("page_size", DEFAULT_SCAN_COUNT))
-        # ZRANGE ... WITHSCORES is the second reply this engine
-        # consumes whose shape changed in RESP3: the RESP2 flat
-        # [member, score, member, score, ...] bulk-string array
-        # becomes an array of [member, double] PAIRS after HELLO 3.
-        # Like the hash source, negotiate RESP3 by default (falling
-        # back to RESP2 against pre-6.0 servers) and parse both
-        # shapes; set protocol=2 to pin the legacy wire form.
-        self.protocol = int(options.get("protocol", 3))
-
-    def partitions(self) -> list[_SingleKeyPartition]:
-        return _single_key_partition(self.options)
+    ZRANGE ... WITHSCORES is the second reply this engine consumes
+    whose shape changed in RESP3: the RESP2 flat [member, score,
+    member, score, ...] bulk-string array becomes an array of
+    [member, double] PAIRS after HELLO 3. Like the hash source, the
+    reader negotiates RESP3 by default (falling back to RESP2 against
+    pre-6.0 servers) and parses both shapes; set protocol=2 to pin the
+    legacy wire form."""
 
     def read(self, part: _SingleKeyPartition) -> Iterator[pa.RecordBatch]:
-        page = max(1, self.page_size)
-        with RedisClient(
-            part.host, part.port, protocol=self.protocol
-        ) as client:
-            # Small keys (≤ one page by ZCARD) read in a single
-            # ZRANGE, keeping the old exact-snapshot semantics; only
-            # keys that genuinely need bounded-memory paging pay the
-            # non-snapshot trade-off (round-9 ADVICE).
-            card = int(client.command("ZCARD", part.key) or 0)
-            single_shot = card <= page
-            rank = 0
-            while True:
-                stop = str(rank + page - 1) if not single_shot else "-1"
-                flat = client.command(
-                    "ZRANGE", part.key, str(rank), stop, "WITHSCORES",
-                )
-                if not flat:
-                    return
-                if isinstance(flat[0], (list, tuple)):  # RESP3 pairs
-                    members = [
-                        m.decode() if isinstance(m, bytes) else str(m)
-                        for m, _s in flat
-                    ]
-                    scores = [float(s) for _m, s in flat]
-                else:  # RESP2 flat member/score alternation
-                    members = [
-                        v.decode() if isinstance(v, bytes) else str(v)
-                        for v in flat[0::2]
-                    ]
-                    scores = [
-                        float(v.decode() if isinstance(v, bytes) else v)
-                        for v in flat[1::2]
-                    ]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(members, type=pa.string()),
-                        pa.array(scores, type=pa.float64()),
-                        pa.array(
-                            range(rank, rank + len(members)), type=pa.int32()
-                        ),
-                    ],
-                    schema=_ZSET_ARROW_SCHEMA,
-                )
-                rank += len(members)
-                if single_shot or len(members) < page:
-                    return
+        return self._read_pages(
+            part, "ZCARD", ("ZRANGE", "WITHSCORES"), self._batch
+        )
+
+    def _batch(self, flat: list, rank: int) -> pa.RecordBatch:
+        if isinstance(flat[0], (list, tuple)):  # RESP3 pairs
+            members = [
+                m.decode() if isinstance(m, bytes) else str(m)
+                for m, _s in flat
+            ]
+            scores = [float(s) for _m, s in flat]
+        else:  # RESP2 flat member/score alternation
+            members = [
+                v.decode() if isinstance(v, bytes) else str(v)
+                for v in flat[0::2]
+            ]
+            scores = [
+                float(v.decode() if isinstance(v, bytes) else v)
+                for v in flat[1::2]
+            ]
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(members, type=pa.string()),
+                pa.array(scores, type=pa.float64()),
+                pa.array(range(rank, rank + len(members)), type=pa.int32()),
+            ],
+            schema=_ZSET_ARROW_SCHEMA,
+        )
 
 
-class RedisZSetWriter(DataSourceWriter):
+class RedisZSetWriter(_PipelinedWriter, DataSourceWriter):
     """Batch writer for (member, score) rows: pipelined ZADD. Scores
     are last-writer-wins per member and set insertion is commutative,
     so partition-parallel writes are deterministic for distinct
@@ -597,29 +601,19 @@ class RedisZSetWriter(DataSourceWriter):
     sink best."""
 
     def __init__(self, options: dict) -> None:
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options.get("port", 6379))
+        super().__init__(options)
         self.key = options["key"]
-        self.batch_size = int(options.get("batch_size", DEFAULT_SCAN_COUNT))
 
-    def write(self, rows) -> WriterCommitMessage:
-        with RedisClient(self.host, self.port) as client:
-            batch: list[tuple] = []
-            for row in rows:
-                if row.member is None or row.score is None:
-                    raise ValueError(
-                        "redis_zset write: NULL "
-                        + ("member" if row.member is None else
-                           f"score for member {row.member!r}")
-                        + " — filter or fill NULLs before writing"
-                    )
-                batch.append(("ZADD", self.key, repr(float(row.score)), row.member))
-                if len(batch) >= self.batch_size:
-                    client.pipeline_checked(batch)
-                    batch = []
-            if batch:
-                client.pipeline_checked(batch)
-        return WriterCommitMessage()
+    def _commands(self, rows) -> Iterator[tuple]:
+        for row in rows:
+            if row.member is None or row.score is None:
+                raise ValueError(
+                    "redis_zset write: NULL "
+                    + ("member" if row.member is None else
+                       f"score for member {row.member!r}")
+                    + " — filter or fill NULLs before writing"
+                )
+            yield ("ZADD", self.key, repr(float(row.score)), row.member)
 
 
 class RedisZSetDataSource(DataSource):
@@ -653,57 +647,28 @@ _LIST_ARROW_SCHEMA = pa.schema(
 )
 
 
-class RedisListReader(DataSourceReader):
+class RedisListReader(_PagedReader):
     """Paged LRANGE — the full list in insertion order with positions,
-    streamed as one RecordBatch per ``DEFAULT_SCAN_COUNT``-sized index
-    slice so a huge list never buffers whole in the worker (same
-    bounded-memory/non-snapshot contract as the zset reader).
-    Read-only source: a distributed RPUSH writer would interleave
-    partitions nondeterministically, so list APPEND is deliberately
-    not offered as a batch sink (use the stream sink for append
-    semantics)."""
-
-    def __init__(self, options: dict) -> None:
-        self.options = options
-        self.page_size = int(options.get("page_size", DEFAULT_SCAN_COUNT))
-        # LRANGE's reply shape is identical under RESP2 and RESP3 (a
-        # plain array of bulk strings), but the source still accepts
-        # the same protocol option as its zset/hash siblings so the
-        # negotiation path is exercised/testable under both protocols.
-        self.protocol = int(options.get("protocol", 3))
-
-    def partitions(self) -> list[_SingleKeyPartition]:
-        return _single_key_partition(self.options)
+    paged as :class:`_PagedReader`. LRANGE's reply shape is identical
+    under RESP2 and RESP3, but the source accepts the same protocol
+    option as its zset/hash siblings so the negotiation path is
+    testable under both. Read-only source: a distributed RPUSH writer
+    would interleave partitions nondeterministically, so list APPEND
+    is deliberately not offered as a batch sink (use the stream sink
+    for append semantics)."""
 
     def read(self, part: _SingleKeyPartition) -> Iterator[pa.RecordBatch]:
-        page = max(1, self.page_size)
-        with RedisClient(
-            part.host, part.port, protocol=self.protocol
-        ) as client:
-            # Same small-key single-shot fallback as the zset reader:
-            # a list within one page (by LLEN) reads atomically.
-            llen = int(client.command("LLEN", part.key) or 0)
-            single_shot = llen <= page
-            pos = 0
-            while True:
-                stop = str(pos + page - 1) if not single_shot else "-1"
-                vals = client.command("LRANGE", part.key, str(pos), stop)
-                if not vals:
-                    return
-                elems = [
-                    v.decode() if isinstance(v, bytes) else str(v)
-                    for v in vals
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(range(pos, pos + len(elems)), type=pa.int32()),
-                        pa.array(elems, type=pa.string()),
-                    ],
-                    schema=_LIST_ARROW_SCHEMA,
-                )
-                pos += len(elems)
-                if single_shot or len(elems) < page:
-                    return
+        return self._read_pages(part, "LLEN", ("LRANGE",), self._batch)
+
+    def _batch(self, vals: list, pos: int) -> pa.RecordBatch:
+        elems = [v.decode() if isinstance(v, bytes) else str(v) for v in vals]
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(range(pos, pos + len(elems)), type=pa.int32()),
+                pa.array(elems, type=pa.string()),
+            ],
+            schema=_LIST_ARROW_SCHEMA,
+        )
 
 
 class RedisListDataSource(DataSource):

@@ -57,7 +57,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     DataSourceStreamWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 from pyspark.sql.types import (
     MapType,
@@ -66,9 +65,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..transport.resp import RedisClient
-
-BATCH_COUNT = 2048  # XRANGE COUNT page size, parity with SCAN COUNT
+from ..transport.resp import DEFAULT_SCAN_COUNT, RedisClient
+from .redis_source import _endpoint, _PipelinedWriter
 
 import logging
 
@@ -141,8 +139,7 @@ def _check_no_trim_loss(
 
 class RedisStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict) -> None:
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options.get("port", 6379))
+        self.host, self.port = _endpoint(options)
         self.key = options.get("key", "events")
 
     def initialOffset(self) -> dict:
@@ -253,7 +250,7 @@ class RedisStreamReader(DataSourceStreamReader):
             cursor = part.start_id
             while True:
                 page = c.xrange(
-                    part.key, f"({cursor}", part.end_id, count=BATCH_COUNT
+                    part.key, f"({cursor}", part.end_id, count=DEFAULT_SCAN_COUNT
                 )
                 if not page:
                     break
@@ -277,7 +274,7 @@ class RedisStreamReader(DataSourceStreamReader):
         pass
 
 
-class RedisStreamWriter(DataSourceStreamWriter):
+class RedisStreamWriter(_PipelinedWriter, DataSourceStreamWriter):
     """Streaming sink: every row of the micro-batch becomes one XADD
     entry (auto id '*'), each column a stream field (nulls skipped),
     pipelined one round trip per ``batch_size`` rows per partition —
@@ -290,35 +287,25 @@ class RedisStreamWriter(DataSourceStreamWriter):
     engine's own ``dropDuplicatesWithinWatermark`` operator."""
 
     def __init__(self, options: dict) -> None:
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options.get("port", 6379))
+        super().__init__(options)
         self.key = options.get("key", "events")
-        self.batch_size = int(options.get("batch_size", BATCH_COUNT))
 
-    def write(self, rows) -> WriterCommitMessage:
-        with RedisClient(self.host, self.port) as client:
-            batch: list[tuple] = []
-            for row in rows:
-                flat: list[str] = []
-                for col, val in row.asDict().items():
-                    if val is not None:
-                        flat += [col, str(val)]
-                if not flat:
-                    # XADD cannot represent a fieldless entry; skipping
-                    # would silently break the one-entry-per-row
-                    # contract (r14 review) — fail the task instead.
-                    raise ValueError(
-                        "redis_stream write: row with all-NULL fields "
-                        "cannot become an XADD entry — filter or fill "
-                        "NULLs before writing"
-                    )
-                batch.append(("XADD", self.key, "*", *flat))
-                if len(batch) >= self.batch_size:
-                    client.pipeline_checked(batch)
-                    batch = []
-            if batch:
-                client.pipeline_checked(batch)
-        return WriterCommitMessage()
+    def _commands(self, rows) -> Iterator[tuple]:
+        for row in rows:
+            flat: list[str] = []
+            for col, val in row.asDict().items():
+                if val is not None:
+                    flat += [col, str(val)]
+            if not flat:
+                # XADD cannot represent a fieldless entry; skipping
+                # would silently break the one-entry-per-row
+                # contract (r14 review) — fail the task instead.
+                raise ValueError(
+                    "redis_stream write: row with all-NULL fields "
+                    "cannot become an XADD entry — filter or fill "
+                    "NULLs before writing"
+                )
+            yield ("XADD", self.key, "*", *flat)
 
 
 class RedisStreamDataSource(DataSource):

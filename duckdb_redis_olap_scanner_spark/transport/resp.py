@@ -22,7 +22,7 @@ runtime; the protocol is simple and public.
 from __future__ import annotations
 
 import socket
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 CRLF = b"\r\n"
 DEFAULT_SCAN_COUNT = 2048  # parity with the reference's COUNT 2048
@@ -100,45 +100,71 @@ def _parse(reader: _SocketReader) -> Any:
     if not line:
         raise RespProtocolError("empty reply line")
     tag, rest = line[:1], line[1:]
-    if tag == b"+":
-        return rest.decode("utf-8", "replace")
-    if tag == b"-":
-        raise RespError(rest.decode("utf-8", "replace"))
-    if tag == b":":
-        return int(rest)
-    if tag == b",":  # RESP3 double
-        return float(rest)
-    if tag == b"#":  # RESP3 boolean
-        return rest == b"t"
-    if tag == b"(":  # RESP3 big number — keep as int (Python is arbitrary precision)
-        return int(rest)
-    if tag == b"_":  # RESP3 null
-        return None
-    if tag == b"$":
-        n = int(rest)
-        if n == -1:
+    try:
+        if tag == b"+":
+            return rest.decode("utf-8", "replace")
+        if tag == b"-":
+            raise RespError(rest.decode("utf-8", "replace"))
+        if tag == b":":
+            return int(rest)
+        if tag == b",":  # RESP3 double
+            return float(rest)
+        if tag == b"#":  # RESP3 boolean
+            return rest == b"t"
+        if tag == b"(":  # RESP3 big number — keep as int (Python is arbitrary precision)
+            return int(rest)
+        if tag == b"_":  # RESP3 null
             return None
-        return reader.read_exact(n)
-    if tag == b"=":  # RESP3 verbatim string: "txt:" / "mkd:" prefix
-        n = int(rest)
-        if n == -1:
-            return None
-        return reader.read_exact(n)[4:]
-    if tag in (b"*", b"~", b">"):  # array / set / push
-        n = int(rest)
-        if n == -1:
-            return None
-        return [_parse(reader) for _ in range(n)]
-    if tag == b"%":  # RESP3 map
-        n = int(rest)
-        return {_as_key(_parse(reader)): _parse(reader) for _ in range(n)}
-    if tag == b"|":  # RESP3 attribute: metadata map PRECEDING the reply
-        n = int(rest)
-        for _ in range(n):  # consume and discard key/value pairs
-            _parse(reader)
-            _parse(reader)
-        return _parse(reader)  # the actual reply follows
+        if tag == b"$":
+            n = int(rest)
+            if n < 0:
+                return _null_length(n)
+            return reader.read_exact(n)
+        if tag == b"=":  # RESP3 verbatim string: "txt:" / "mkd:" prefix
+            n = int(rest)
+            if n < 0:
+                return _null_length(n)
+            return reader.read_exact(n)[4:]
+        if tag in (b"*", b"~", b">"):  # array / set / push
+            n = int(rest)
+            if n < 0:
+                return _null_length(n)
+            return [_parse(reader) for _ in range(n)]
+        if tag == b"%":  # RESP3 map
+            n = int(rest)
+            if n < 0:
+                return _null_length(n)
+            return {_as_key(_parse(reader)): _parse(reader) for _ in range(n)}
+        if tag == b"|":  # RESP3 attribute: metadata map PRECEDING the reply
+            n = int(rest)
+            if n < 0:
+                return _null_length(n)
+            for _ in range(n):  # consume and discard key/value pairs
+                _parse(reader)
+                _parse(reader)
+            return _parse(reader)  # the actual reply follows
+    except ValueError as e:  # a non-numeric length, integer or double
+        raise RespProtocolError(f"malformed RESP line {line!r}") from e
     raise RespProtocolError(f"unknown RESP tag {tag!r}")
+
+
+def _null_length(n: int) -> None:
+    """-1 is the null length; any other negative length is malformed
+    (reading on would desync the stream)."""
+    if n != -1:
+        raise RespProtocolError(f"negative RESP length {n}")
+    return None
+
+
+def _port(text: str) -> int | None:
+    """A TCP port written as canonical ASCII digits in 1-65535, else
+    None. ``int()`` alone would also take '+2', '1_0', ' 80' and
+    Unicode digits."""
+    if text.isascii() and text.isdigit() and len(text) <= 5:
+        port = int(text)
+        if 0 < port <= 65535:
+            return port
+    return None
 
 
 def _redirect_of(exc: RespError) -> tuple[str, str, int] | None:
@@ -153,11 +179,10 @@ def _redirect_of(exc: RespError) -> tuple[str, str, int] | None:
     if len(parts) != 2 or ":" not in parts[1]:
         return None
     host, _, port = parts[1].rpartition(":")
-    # Canonical ASCII-decimal ports only (what Redis emits): int()
-    # alone would also accept '+2' / '1_0' / Unicode digits.
-    if not (port.isascii() and port.isdigit()):
+    port = _port(port)
+    if port is None:
         return None
-    return kind, host, int(port)
+    return kind, host, port
 
 
 def _is_wrongtype(exc: RespError) -> bool:
@@ -187,6 +212,16 @@ def _as_str(v: Any) -> str | None:
     if isinstance(v, bytes):
         return v.decode("utf-8", "replace")
     return str(v)
+
+
+def _pairs(reply: Any, value: Callable[[Any], Any] = _as_str) -> dict:
+    """A field/value reply as a dict, for both wire shapes: the RESP3
+    map (keys already decoded by ``_parse``) and the RESP2 flat
+    ``[field, value, field, value, ...]`` array. None reads as {}."""
+    if isinstance(reply, dict):
+        return {k: value(v) for k, v in reply.items()}
+    it = iter(reply or [])
+    return {_as_str(k): value(v) for k, v in zip(it, it)}
 
 
 class RedisClient:
@@ -467,11 +502,7 @@ class RedisClient:
             return out
 
     def hgetall(self, key: str) -> dict[str, str]:
-        reply = self.command("HGETALL", key)
-        if isinstance(reply, dict):  # RESP3 map reply
-            return {k: _as_str(v) for k, v in reply.items()}
-        it = iter(reply or [])
-        return {_as_str(k): _as_str(v) for k, v in zip(it, it)}
+        return _pairs(self.command("HGETALL", key))
 
     def hgetall_pipelined(self, keys: list[str]) -> list[dict[str, str]]:
         replies = self.pipeline([("HGETALL", k) for k in keys])
@@ -495,13 +526,7 @@ class RedisClient:
                         reply = None
                 else:
                     reply = None
-            if reply is None:
-                out.append({})
-            elif isinstance(reply, dict):
-                out.append({k: _as_str(v) for k, v in reply.items()})
-            else:
-                it = iter(reply)
-                out.append({_as_str(k): _as_str(v) for k, v in zip(it, it)})
+            out.append(_pairs(reply))
         return out
 
     def type_of(self, key: str) -> str:
@@ -526,16 +551,7 @@ class RedisClient:
     ) -> list[tuple[str, dict[str, str]]]:
         """Entries in [start, end] (start may carry a '(' prefix for the
         exclusive form) as (id, fields) pairs."""
-        args: list[Any] = ["XRANGE", key, start, end]
-        if count is not None:
-            args += ["COUNT", count]
-        out = []
-        for sid, flat in self.command(*args) or []:
-            it = iter(flat)
-            out.append(
-                (_as_str(sid), {_as_str(f): _as_str(v) for f, v in zip(it, it)})
-            )
-        return out
+        return self._xrange("XRANGE", key, start, end, count=count)
 
     def xrevrange(
         self,
@@ -546,16 +562,12 @@ class RedisClient:
     ) -> list[tuple[str, dict[str, str]]]:
         """Entries in [start, end], HIGHEST id first. ``count=1`` reads
         just the newest entry — O(1) instead of an O(stream) XRANGE."""
-        args: list[Any] = ["XREVRANGE", key, end, start]
+        return self._xrange("XREVRANGE", key, end, start, count=count)
+
+    def _xrange(self, *args: Any, count: int | None) -> list[tuple[str, dict[str, str]]]:
         if count is not None:
-            args += ["COUNT", count]
-        out = []
-        for sid, flat in self.command(*args) or []:
-            it = iter(flat)
-            out.append(
-                (_as_str(sid), {_as_str(f): _as_str(v) for f, v in zip(it, it)})
-            )
-        return out
+            args += ("COUNT", count)
+        return [(_as_str(sid), _pairs(flat)) for sid, flat in self.command(*args) or []]
 
     def xinfo_stream(self, key: str) -> dict[str, Any]:
         """``XINFO STREAM`` as a str→value dict. Handles BOTH wire
@@ -565,14 +577,7 @@ class RedisClient:
         broke under RESP3). Raises :class:`RespError` verbatim for a
         missing key ('no such key') or a pre-XINFO server ('unknown
         command'); callers distinguish the two by message."""
-        reply = self.command("XINFO", "STREAM", key)
-        if isinstance(reply, dict):
-            return {_as_str(k): v for k, v in reply.items()}
-        flat = list(reply or [])
-        return {
-            _as_str(flat[i]): flat[i + 1]
-            for i in range(0, len(flat) - 1, 2)
-        }
+        return _pairs(self.command("XINFO", "STREAM", key), value=lambda v: v)
 
     def scan_iter(
         self,
@@ -612,6 +617,9 @@ def parse_host_port(address: str) -> tuple[str, int]:
     if address is None:
         raise ValueError("address must not be NULL")
     host, sep, port = address.rpartition(":")
-    if not sep or not host or not port:
-        raise ValueError(f"expected 'HOST:PORT', got {address!r}")
-    return host, int(port)
+    port = _port(port)
+    if not sep or not host or port is None:
+        raise ValueError(
+            f"expected 'HOST:PORT' with a port in 1-65535, got {address!r}"
+        )
+    return host, port

@@ -311,6 +311,67 @@ def test_kv_writer_survives_reshard(spark):
             assert k not in other.store.strings, (k, "leaked to other node")
 
 
+@pytest.mark.parametrize("kind", ["hash", "zset", "stream"])
+def test_writers_replay_moved_replies_in_batches(monkeypatch, kind):
+    """Every batch writer, not just kv: -MOVED replies inside a
+    pipelined batch (batch_size < rows) are replayed on the new owner,
+    nothing leaks to the old one, and a non-redirect error reply still
+    fails the write."""
+    from pyspark.sql import Row
+
+    from duckdb_redis_olap_scanner_spark import testing
+    from duckdb_redis_olap_scanner_spark.sources.redis_source import (
+        RedisHashWriter,
+        RedisZSetWriter,
+    )
+    from duckdb_redis_olap_scanner_spark.sources.redis_stream_source import (
+        RedisStreamWriter,
+    )
+
+    dispatch = testing._Handler._dispatch
+
+    def dispatch_xadd_redirects(self, store, cmd):
+        # The fake redirects the other key commands; a cluster node
+        # redirects XADD the same way.
+        red = cmd[0].upper() == "XADD" and self._redirect_for(store, cmd[1], False)
+        return red or dispatch(self, store, cmd)
+
+    monkeypatch.setattr(testing._Handler, "_dispatch", dispatch_xadd_redirects)
+    with FakeRedisServer() as a, FakeRedisServer() as b:
+        opts = {"host": a.host, "port": str(a.port), "batch_size": "4"}
+        if kind == "hash":
+            writer = RedisHashWriter(opts)
+            rows = [Row(key=f"wh:{i:02d}", value={"f": str(i)}) for i in range(10)]
+            want = {r.key: r.value for r in rows}
+            moved = sorted(want)[::3]
+            stored = lambda srv: srv.store.hashes  # noqa: E731
+        elif kind == "zset":
+            writer = RedisZSetWriter({**opts, "key": "wz"})
+            rows = [Row(member=f"m{i}", score=float(i)) for i in range(10)]
+            want = {"wz": {r.member: r.score for r in rows}}
+            moved = ["wz"]
+            stored = lambda srv: srv.store.zsets  # noqa: E731
+        else:
+            writer = RedisStreamWriter({**opts, "key": "ws"})
+            rows = [Row(f=str(i)) for i in range(10)]
+            want = {"ws": [{"f": r.f} for r in rows]}
+            moved = ["ws"]
+            stored = lambda srv: {  # noqa: E731
+                k: [dict(zip(flat[::2], flat[1::2])) for _sid, flat in v]
+                for k, v in srv.store.streams.items()
+            }
+        for k in moved:
+            a.store.moved[k] = (b.host, b.port)
+        writer.write(iter(rows))
+        assert stored(b) == {k: v for k, v in want.items() if k in moved}
+        assert stored(a) == {k: v for k, v in want.items() if k not in moved}
+
+        a.store.moved.clear()
+        a.seed_strings({k: "not-a-container" for k in moved})
+        with pytest.raises(RespError, match="WRONGTYPE"):
+            writer.write(iter(rows))
+
+
 def test_hash_and_ttl_follow_redirects():
     """hgetall_pipelined fetches a migrated hash from its new owner
     (instead of misreporting {}), keeping the wrong-type → {} mapping

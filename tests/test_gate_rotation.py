@@ -209,6 +209,21 @@ def test_referenced_callables_reach_datasource_classes():
     assert "Engine" in quals  # the class itself (getsource covers it)
 
 
+def test_referenced_callables_reach_inherited_methods():
+    """A reader or writer whose loop lives on a package base class:
+    the walk follows the base, so an edit to the shared loop dirties
+    every entry that runs through it."""
+    reg = catalog.registry()
+    for name, want in [
+        ("redis_kv_golden", {"_ScanReader.read", "RedisKVReader._batch",
+                             "_PipelinedWriter.write"}),
+        ("redis_zset_golden", {"_PagedReader._read_pages"}),
+    ]:
+        quals = {f.__qualname__
+                 for f in catalog._referenced_pkg_callables(reg[name].raw_fn)}
+        assert want <= quals, (name, want - quals)
+
+
 def test_round_commits_and_blob_real_repo():
     root = catalog._repo_root()
     commits = catalog._round_commits(root)

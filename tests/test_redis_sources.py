@@ -4,6 +4,7 @@ unimplemented surface (redis_kv, redis_hgetall)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -507,3 +508,131 @@ def test_hash_writer_rejects_null_key_even_with_empty_map(spark, redis_server):
              .option("host", redis_server.host)
              .option("port", redis_server.port)
              .mode("append").save())
+
+
+# ---------------------------------------------------------------------------
+# Wire traffic per Redis entry point (no Spark)
+# ---------------------------------------------------------------------------
+
+
+def _drive_entry_point(name, srv, monkeypatch):
+    """Run one Redis entry point directly against ``srv``."""
+    import pandas as pd
+    from pyspark.sql import Row
+
+    from duckdb_redis_olap_scanner_spark.functions import redis_fns
+    from duckdb_redis_olap_scanner_spark.sources import redis_source as rs
+    from duckdb_redis_olap_scanner_spark.sources import redis_stream_source as st
+
+    opts = {"host": srv.host, "port": str(srv.port)}
+
+    def read(reader):
+        return [b for p in reader.partitions() for b in reader.read(p)]
+
+    def udf(make):
+        # 4-key chunks: the two batches below span 3 chunks, one all-NULL
+        monkeypatch.setattr(redis_fns, "MGET_CHUNK", 4)
+        batches = [pd.Series(["s:00", None, "s:01", "nope", "h:00", "s:02"]),
+                   pd.Series([None, None])]
+        return [v for s in make(srv.host, srv.port).func(iter(batches)) for v in s]
+
+    if name == "scan":
+        out = read(rs.RedisScanReader({**opts, "pattern": "s:*", "count": "4"}))
+        assert sum(b.num_rows for b in out) == 10
+    elif name == "kv":
+        out = read(rs.RedisKVReader({**opts, "pattern": "s:*", "count": "4"}))
+        assert sum(b.num_rows for b in out) == 10
+    elif name == "hash":
+        out = read(rs.RedisHashReader({**opts, "pattern": "h:*", "count": "4"}))
+        assert sum(b.num_rows for b in out) == 6
+    elif name == "zset":
+        out = read(rs.RedisZSetReader({**opts, "key": "z", "page_size": "3"}))
+        assert [b.num_rows for b in out] == [3, 3, 1]
+    elif name == "list":
+        out = read(rs.RedisListReader({**opts, "key": "l", "page_size": "3"}))
+        assert [b.num_rows for b in out] == [3, 3, 1]
+    elif name == "redis_get":
+        assert udf(redis_fns.make_redis_get)[:4] == ["v0", None, "v1", None]
+    elif name == "redis_ttl":
+        assert udf(redis_fns.make_redis_ttl)[:4] == [30, pd.NA, -1, -2]
+    elif name == "redis_hgetall":
+        assert udf(redis_fns.make_redis_hgetall)[4] == {"a": "0", "b": "x"}
+    elif name == "kv_writer":
+        rs.RedisKVWriter({**opts, "batch_size": "4"}).write(
+            iter([Row(key=f"w:{i}", value=str(i)) for i in range(10)]))
+    elif name == "hash_writer":
+        rows = [Row(key=f"wh:{i}", value={"f": str(i)}) for i in range(6)]
+        rs.RedisHashWriter({**opts, "batch_size": "4"}).write(
+            iter(rows[:3] + [Row(key="wh:empty", value={})] + rows[3:]))
+    elif name == "zset_writer":
+        rs.RedisZSetWriter({**opts, "key": "wz", "batch_size": "4"}).write(
+            iter([Row(member=f"m{i}", score=float(i)) for i in range(7)]))
+    elif name == "stream_writer":
+        st.RedisStreamWriter({**opts, "key": "ws", "batch_size": "4"}).write(
+            iter([Row(a=str(i), b=None) for i in range(5)]))
+    elif name == "stream_reader":
+        reader = st.RedisStreamReader({**opts, "key": "x"})
+        end = reader.latestOffset()
+        (part,) = reader.partitions({"last_id": "0-1"}, end)
+        assert [sid for sid, _ in reader.read(part)] == ["0-2", "0-3", "0-4"]
+
+
+@pytest.mark.parametrize("name,want_round_trips,want_commands", [
+    ("scan", 6, {"PING": 1, "SCAN": 5}),
+    ("kv", 9, {"PING": 1, "SCAN": 5, "MGET": 3}),
+    ("hash", 9, {"HELLO": 1, "PING": 1, "SCAN": 5, "HGETALL": 6}),
+    ("zset", 6, {"HELLO": 1, "PING": 1, "ZCARD": 1, "ZRANGE": 3}),
+    ("list", 6, {"HELLO": 1, "PING": 1, "LLEN": 1, "LRANGE": 3}),
+    ("redis_get", 3, {"PING": 1, "MGET": 2}),
+    ("redis_ttl", 3, {"PING": 1, "TTL": 5}),
+    ("redis_hgetall", 3, {"PING": 1, "HGETALL": 5}),
+    ("kv_writer", 4, {"PING": 1, "SET": 10}),
+    ("hash_writer", 3, {"PING": 1, "HSET": 6}),
+    ("zset_writer", 3, {"PING": 1, "ZADD": 7}),
+    ("stream_writer", 3, {"PING": 1, "XADD": 5}),
+    ("stream_reader", 6, {"PING": 2, "XINFO": 3, "XRANGE": 1}),
+])
+def test_entry_point_wire_round_trips(monkeypatch, name, want_round_trips,
+                                      want_commands):
+    """Exact per-command counts (server side, counted the way the
+    benchmark's server counts them) and client round trips for every
+    Redis entry point on a small keyspace: pages of ``count`` /
+    ``page_size`` / ``batch_size`` / ``MGET_CHUNK``, one pipeline per
+    page, nothing sent for an all-NULL chunk or an empty hash map."""
+    from collections import Counter
+
+    from duckdb_redis_olap_scanner_spark import testing
+    from duckdb_redis_olap_scanner_spark.transport.resp import RedisClient
+
+    with testing.FakeRedisServer() as srv:
+        srv.seed_strings({f"s:{i:02d}": f"v{i}" for i in range(10)})
+        srv.seed_hashes({f"h:{i:02d}": {"a": str(i), "b": "x"} for i in range(6)})
+        srv.seed_zset("z", {f"m{i}": float(i) for i in range(7)})
+        srv.seed_list("l", [f"e{i}" for i in range(7)])
+        srv.seed_ttls({"s:00": 30})
+        with RedisClient(srv.host, srv.port) as c:
+            for i in range(4):
+                c.command("XADD", "x", "*", "f", str(i))
+
+        commands, round_trips = Counter(), Counter()
+        dispatch = testing._Handler._dispatch
+        command, pipeline = RedisClient.command, RedisClient.pipeline
+
+        def counting_dispatch(self, store, cmd):
+            commands[cmd[0].upper()] += 1
+            return dispatch(self, store, cmd)
+
+        def counting_command(self, *args):
+            round_trips["n"] += 1
+            return command(self, *args)
+
+        def counting_pipeline(self, cmds):
+            round_trips["n"] += bool(cmds)
+            return pipeline(self, cmds)
+
+        monkeypatch.setattr(testing._Handler, "_dispatch", counting_dispatch)
+        monkeypatch.setattr(RedisClient, "command", counting_command)
+        monkeypatch.setattr(RedisClient, "pipeline", counting_pipeline)
+        _drive_entry_point(name, srv, monkeypatch)
+        assert dict(commands) == want_commands
+        assert round_trips["n"] == want_round_trips

@@ -7,6 +7,7 @@ import pytest
 from duckdb_redis_olap_scanner_spark.transport.resp import (
     RedisClient,
     RespError,
+    RespProtocolError,
     encode_command,
     parse_host_port,
 )
@@ -22,9 +23,12 @@ def test_encode_command():
 def test_parse_host_port():
     assert parse_host_port("127.0.0.1:6379") == ("127.0.0.1", 6379)
     assert parse_host_port("myhost:10") == ("myhost", 10)
-    for bad in ["127.0.0.1", ":6379", "host:", None]:
+    for bad in ["127.0.0.1", ":6379", "host:", None, "h:0", "h:70000",
+                "h:+12", "h:6379 ", "h:abc", "h:1_0", "h:\u0661"]:
         with pytest.raises(ValueError):
             parse_host_port(bad)
+    with pytest.raises(ValueError, match="HOST:PORT"):
+        parse_host_port("h:abc")
 
 
 def test_ping_get_mget(redis_server):
@@ -175,3 +179,10 @@ def test_resp3_parse_branches():
     assert parse(b"|0\r\n:7\r\n") == 7
     assert parse(b"$-1\r\n") is None
     assert parse(b"*-1\r\n") is None
+    # Malformed lengths fail as protocol errors instead of desyncing
+    # the stream (a negative length other than -1 used to read on) or
+    # leaking a bare ValueError.
+    for wire in (b"$-2\r\nhello world\r\n", b"*-3\r\n", b"=-5\r\n",
+                 b"%-2\r\n", b"$abc\r\n", b"*1x\r\n", b":12a\r\n"):
+        with pytest.raises(RespProtocolError):
+            parse(wire)
