@@ -41,7 +41,7 @@ import socketserver
 import threading
 from typing import Any
 
-from .transport.resp import CRLF, RespProtocolError, _SocketReader
+from .transport.resp import CRLF, RespProtocolError
 
 # Error classes real Redis replies lead with — the only first tokens
 # _encode treats as an already-coded error line. Everything else
@@ -234,10 +234,45 @@ class FakeRedisStore:
         return 1 if existed else 0
 
 
+class _CommandReader:
+    """Buffered reader that reassembles commands across recv() calls.
+
+    The server's own command reader: the client's former reader, kept
+    as it was (each read re-slices the rest of the buffer). The fake's
+    CPU time is the floor a benchmark compares the engine against, so
+    a change to the client's reader must not also make the server
+    cheaper."""
+
+    def __init__(self, sock: socket.socket, bufsize: int = 65536) -> None:
+        self._sock = sock
+        self._buf = b""
+        self._bufsize = bufsize
+
+    def _fill(self) -> None:
+        chunk = self._sock.recv(self._bufsize)
+        if not chunk:
+            raise RespProtocolError("connection closed by peer")
+        self._buf += chunk
+
+    def read_line(self) -> bytes:
+        while True:
+            idx = self._buf.find(CRLF)
+            if idx >= 0:
+                line, self._buf = self._buf[:idx], self._buf[idx + 2 :]
+                return line
+            self._fill()
+
+    def read_exact(self, n: int) -> bytes:
+        while len(self._buf) < n + 2:  # payload + trailing CRLF
+            self._fill()
+        data, self._buf = self._buf[:n], self._buf[n + 2 :]
+        return data
+
+
 class _Handler(socketserver.BaseRequestHandler):
     def handle(self) -> None:  # noqa: C901 - command dispatch
         store: FakeRedisStore = self.server.store  # type: ignore[attr-defined]
-        reader = _SocketReader(self.request)
+        reader = _CommandReader(self.request)
         # Per-connection negotiated protocol (HELLO switches it), as in
         # real Redis — other connections stay on RESP2.
         self.proto = 2
@@ -259,7 +294,7 @@ class _Handler(socketserver.BaseRequestHandler):
             except OSError:
                 return
 
-    def _read_command(self, reader: _SocketReader) -> list[str] | None:
+    def _read_command(self, reader: _CommandReader) -> list[str] | None:
         line = reader.read_line()
         if not line.startswith(b"*"):
             raise RespProtocolError("inline commands unsupported")

@@ -15,6 +15,27 @@ protocol specification.  Unlike the reference we:
   reference's empty-string quirk (``redis_client.cpp:232-236``); callers
   that want bug-compatibility can coalesce.
 
+Decoding is one pass over the socket buffer, like the reference's
+parser over its receive buffer (``resp_parser.cpp:41-130``):
+
+* ``_SocketReader`` keeps the received bytes and a cursor into them. A
+  read advances the cursor and slices out only what it returns;
+  consumed bytes are dropped once, just before the next ``recv``
+  (re-slicing the rest of the buffer on every line made each ~250 KB
+  MGET page cost quadratic copying).
+* Aggregates (``*``/``~``/``>`` and ``%`` maps) take a fast path in
+  ``_SocketReader.read_elements``: each ``$`` bulk string already wholly
+  in the buffer is cut out directly; any other element (an integer, a
+  null, a nested aggregate, a bulk string still arriving) goes through
+  the same recursive ``_parse``.
+* Every bulk string must end in CRLF, so a wrong length is a
+  ``RespProtocolError`` at the reply that carries it, never a silently
+  shifted stream.
+
+``testing.FakeRedisServer`` reads its commands with its own copy of the
+former reader: its CPU time is the benchmark's floor, so a change here
+must not make the server cheaper too.
+
 No third-party client library is used because none is available in the
 runtime; the protocol is simple and public.
 """
@@ -67,11 +88,15 @@ def encode_command(*args: Any) -> bytes:
 
 
 class _SocketReader:
-    """Buffered reader that reassembles replies across recv() calls."""
+    """Buffered reader that reassembles replies across recv() calls,
+    walking ``_buf`` with the cursor ``_pos`` (see the module
+    docstring). ``_fill`` only appends what one ``recv`` returned, so
+    the growth of ``_buf`` across it is the bytes received."""
 
     def __init__(self, sock: socket.socket, bufsize: int = 65536) -> None:
         self._sock = sock
         self._buf = b""
+        self._pos = 0
         self._bufsize = bufsize
 
     def _fill(self) -> None:
@@ -80,19 +105,63 @@ class _SocketReader:
             raise RespProtocolError("connection closed by peer")
         self._buf += chunk
 
+    def _refill(self) -> None:
+        """Drop the consumed bytes, then receive more."""
+        if self._pos:
+            self._buf = self._buf[self._pos :]
+            self._pos = 0
+        self._fill()
+
     def read_line(self) -> bytes:
         while True:
-            idx = self._buf.find(CRLF)
+            idx = self._buf.find(CRLF, self._pos)
             if idx >= 0:
-                line, self._buf = self._buf[:idx], self._buf[idx + 2 :]
+                line = self._buf[self._pos : idx]
+                self._pos = idx + 2
                 return line
-            self._fill()
+            self._refill()
 
     def read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n + 2:  # payload + trailing CRLF
-            self._fill()
-        data, self._buf = self._buf[:n], self._buf[n + 2 :]
-        return data
+        while len(self._buf) - self._pos < n + 2:  # payload + trailing CRLF
+            self._refill()
+        start = self._pos
+        stop = start + n
+        if self._buf[stop : stop + 2] != CRLF:
+            raise RespProtocolError("bulk string not terminated by CRLF")
+        self._pos = stop + 2
+        return self._buf[start:stop]
+
+    def read_elements(self, n: int) -> list:
+        """The ``n`` elements of an aggregate reply. A ``$`` bulk
+        string that is wholly in the buffer is sliced out here; any
+        other element (an integer, a null, a nested aggregate, a bulk
+        string still arriving) goes through ``_parse``."""
+        out: list = []
+        append = out.append
+        buf, pos, end = self._buf, self._pos, len(self._buf)
+        try:
+            for _ in range(n):
+                if pos < end and buf[pos] == 36:  # "$"
+                    eol = buf.find(CRLF, pos)
+                    if eol > 0:
+                        size = int(buf[pos + 1 : eol])
+                        start = eol + 2
+                        stop = start + size
+                        if size >= 0 and stop + 2 <= end:
+                            if buf[stop] != 13 or buf[stop + 1] != 10:
+                                raise RespProtocolError(
+                                    "bulk string not terminated by CRLF"
+                                )
+                            append(buf[start:stop])
+                            pos = stop + 2
+                            continue
+                self._pos = pos
+                append(_parse(self))
+                buf, pos, end = self._buf, self._pos, len(self._buf)
+        except ValueError as e:  # a non-numeric bulk length
+            raise RespProtocolError(f"malformed RESP line {buf[pos:eol]!r}") from e
+        self._pos = pos
+        return out
 
 
 def _parse(reader: _SocketReader) -> Any:
@@ -129,12 +198,13 @@ def _parse(reader: _SocketReader) -> Any:
             n = int(rest)
             if n < 0:
                 return _null_length(n)
-            return [_parse(reader) for _ in range(n)]
+            return reader.read_elements(n)
         if tag == b"%":  # RESP3 map
             n = int(rest)
             if n < 0:
                 return _null_length(n)
-            return {_as_key(_parse(reader)): _parse(reader) for _ in range(n)}
+            it = iter(reader.read_elements(2 * n))
+            return {_as_key(k): v for k, v in zip(it, it)}
         if tag == b"|":  # RESP3 attribute: metadata map PRECEDING the reply
             n = int(rest)
             if n < 0:

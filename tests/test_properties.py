@@ -7,13 +7,21 @@ redis_client.cpp:127-143).
 from __future__ import annotations
 
 import fnmatch
+import itertools
+import random
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from duckdb_redis_olap_scanner_spark.sources.redis_source import glob_escape
-from duckdb_redis_olap_scanner_spark.testing import _encode
+from duckdb_redis_olap_scanner_spark.testing import (
+    _encode,
+    _encode_double,
+    _encode_map,
+)
 from duckdb_redis_olap_scanner_spark.transport.resp import (
+    RespProtocolError,
     _parse,
     _SocketReader,
     encode_command,
@@ -43,29 +51,123 @@ class ChunkedFakeSocket:
         return chunk
 
 
-# RESP value universe for round-trip: what _encode emits maps 1:1 back
-# except bytes→str on simple strings; restrict to the asymmetry-free set.
-resp_values = st.recursive(
+# RESP2 values whose _encode form parses back 1:1 (simple strings would
+# come back as str, so they are left out).
+resp_scalars = st.one_of(
+    st.none(),
+    st.integers(min_value=-(2**62), max_value=2**62),
+    st.binary(max_size=64),
+)
+
+key_text = st.text(
+    alphabet=st.characters(blacklist_categories=("Cs",)), min_size=0, max_size=40
+)
+
+
+def _aggregate(items: list, tag: bytes) -> tuple[bytes, list]:
+    return (tag + b"%d\r\n" % len(items) + b"".join(w for w, _ in items),
+            [v for _, v in items])
+
+
+def _map(pairs: list) -> tuple[bytes, dict]:
+    wire = b"%%%d\r\n" % len(pairs) + b"".join(
+        _encode(k) + w for k, (w, _) in pairs
+    )
+    return wire, {k: v for k, (_, v) in pairs}
+
+
+# (wire, value) pairs of one reply, RESP2 and RESP3: bulk strings,
+# integers, both null shapes, doubles, ``%`` maps, and arrays/sets/
+# pushes that nest and mix bulk and non-bulk elements — every shape
+# the aggregate fast path either slices or hands back to _parse.
+resp_replies = st.recursive(
     st.one_of(
-        st.none(),
-        st.integers(min_value=-(2**62), max_value=2**62),
-        st.binary(max_size=64).filter(lambda b: True),
+        resp_scalars.map(lambda v: (_encode(v), v)),
+        st.just((_encode(None, proto=3), None)),
+        st.floats(allow_nan=False, allow_infinity=False).map(
+            lambda x: (_encode_double(x), x)
+        ),
+        st.dictionaries(
+            key_text,
+            st.one_of(resp_scalars, st.lists(resp_scalars, max_size=4)),
+            max_size=4,
+        ).map(lambda d: (_encode_map(d, proto=3), d)),
     ),
-    lambda children: st.lists(children, max_size=6),
+    lambda children: st.one_of(
+        st.builds(_aggregate, st.lists(children, max_size=6),
+                  st.sampled_from([b"*", b"~", b">"])),
+        st.lists(st.tuples(key_text, children), max_size=4,
+                 unique_by=lambda kv: kv[0]).map(_map),
+    ),
     max_leaves=20,
 )
 
+# Several replies back to back in one stream, as a pipeline reads them.
+reply_streams = st.lists(resp_replies, min_size=1, max_size=5)
+
 
 @given(
-    value=resp_values,
+    replies=reply_streams,
     cuts=st.lists(st.integers(min_value=1, max_value=10_000), max_size=12),
 )
 @settings(max_examples=300, deadline=None)
-def test_resp_roundtrip_survives_fragmentation(value, cuts):
-    wire = _encode(value)
+def test_resp_roundtrip_survives_fragmentation(replies, cuts):
+    wire = b"".join(w for w, _ in replies)
     reader = _SocketReader(ChunkedFakeSocket(wire, cuts))
-    got = _parse(reader)
-    assert got == value
+    got = [_parse(reader) for _ in replies]
+    assert got == [v for _, v in replies]
+
+
+@given(
+    replies=reply_streams,
+    cuts=st.lists(st.integers(min_value=1, max_value=10_000), max_size=4),
+)
+@settings(max_examples=100, deadline=None)
+def test_truncated_reply_is_a_clean_error(replies, cuts):
+    """Every proper prefix of a valid reply stream, then EOF: the
+    replies wholly inside the prefix parse exactly and the next one
+    raises RespProtocolError — never a partial list or a shortened
+    value."""
+    wire = b"".join(w for w, _ in replies)
+    ends = list(itertools.accumulate(len(w) for w, _ in replies))
+    for cut in range(len(wire)):
+        reader = _SocketReader(ChunkedFakeSocket(wire[:cut], cuts))
+        whole = sum(e <= cut for e in ends)
+        got = [_parse(reader) for _ in range(whole)]
+        assert got == [v for _, v in replies[:whole]]
+        with pytest.raises(RespProtocolError):
+            _parse(reader)
+
+
+@pytest.mark.parametrize("bufsize", [4096, 65536])
+def test_reader_accounts_bytes_and_drops_consumed(monkeypatch, bufsize):
+    """A recorded-size MGET page (2048 bulk strings of 50-150 B) read
+    through a chunked socket: the buffer growth summed over ``_fill``
+    calls (how a tracer counts bytes in) equals the bytes sent, and the
+    buffer never holds more than one recv plus the largest element, so
+    consumed bytes are really dropped."""
+    rng = random.Random(bufsize)
+    values = [rng.randbytes(rng.randint(50, 150)) for _ in range(2048)]
+    wire = _encode(values)
+    largest = max(len(_encode(v)) for v in values)
+    cuts, at = [], 0
+    while at < len(wire):
+        at += rng.randint(1, bufsize)
+        cuts.append(at)
+    sizes, grown = [], []
+    fill = _SocketReader._fill
+
+    def counting_fill(reader):
+        before = len(reader._buf)
+        fill(reader)
+        grown.append(len(reader._buf) - before)
+        sizes.append(len(reader._buf))
+
+    monkeypatch.setattr(_SocketReader, "_fill", counting_fill)
+    reader = _SocketReader(ChunkedFakeSocket(wire, cuts), bufsize=bufsize)
+    assert _parse(reader) == values
+    assert sum(grown) == len(wire)
+    assert max(sizes) <= bufsize + largest
 
 
 @given(
@@ -86,11 +188,6 @@ def test_encode_command_parses_back(args):
         a if isinstance(a, bytes) else str(a).encode("utf-8") for a in args
     ]
     assert got == want
-
-
-key_text = st.text(
-    alphabet=st.characters(blacklist_categories=("Cs",)), min_size=0, max_size=40
-)
 
 
 @given(key=key_text)

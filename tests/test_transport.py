@@ -186,3 +186,14 @@ def test_resp3_parse_branches():
                  b"%-2\r\n", b"$abc\r\n", b"*1x\r\n", b":12a\r\n"):
         with pytest.raises(RespProtocolError):
             parse(wire)
+    # A bulk string's two bytes after its payload must be CRLF: a
+    # wrong length would otherwise shift the stream silently, and fail
+    # (if at all) one reply later. Checked on a lone bulk string, on
+    # the aggregate fast path (array and map) and on a malformed bulk
+    # length inside an aggregate.
+    for wire in (b"*2\r\n$3\r\nfooXY$3\r\nbar\r\n", b"$4\r\nab\r\n+OK\r\n",
+                 b"$3\r\nfoo\n\r", b"%1\r\n$1\r\naXY:1\r\n",
+                 b"*2\r\n:1\r\n$2\r\nab\r\r", b"*1\r\n$x\r\nab\r\n"):
+        with pytest.raises(RespProtocolError):
+            parse(wire)
+    assert parse(b"*3\r\n$3\r\nfoo\r\n$-1\r\n$0\r\n\r\n") == [b"foo", None, b""]
