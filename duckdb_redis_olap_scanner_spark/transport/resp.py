@@ -47,6 +47,7 @@ from typing import Any, Callable, Iterator
 
 CRLF = b"\r\n"
 DEFAULT_SCAN_COUNT = 2048  # parity with the reference's COUNT 2048
+MAX_REDIRECTS = 5  # MOVED/ASK hops followed before a redirect loop is declared
 
 
 class RespError(Exception):
@@ -255,23 +256,6 @@ def _redirect_of(exc: RespError) -> tuple[str, str, int] | None:
     return kind, host, port
 
 
-def _is_wrongtype(exc: RespError) -> bool:
-    """True for the WRONGTYPE error a GET on a hash/list/zset key
-    raises — where MGET would have returned nil for the same key."""
-    return str(exc).startswith("WRONGTYPE")
-
-
-def _is_cluster_multikey_error(exc: RespError) -> bool:
-    """Errors a Redis Cluster raises for a multi-key command that a
-    per-key re-fetch can recover from: MOVED/ASK (slot elsewhere),
-    CROSSSLOT (keys span slots — virtually every SCAN-page MGET on a
-    real cluster), TRYAGAIN (keys split mid-migration)."""
-    if _redirect_of(exc) is not None:
-        return True
-    msg = str(exc)
-    return msg.startswith("CROSSSLOT") or msg.startswith("TRYAGAIN")
-
-
 def _as_key(v: Any) -> Any:
     return v.decode("utf-8", "replace") if isinstance(v, bytes) else v
 
@@ -373,11 +357,23 @@ class RedisClient:
         self.close()
 
     # -- core ----------------------------------------------------------------
+    # A reply cut short (timeout, reset, malformed bytes) leaves the
+    # stream at an unknown offset: the next read would return the rest
+    # of the old reply as the answer to a new command. So any failure
+    # other than a complete error reply closes the connection, and the
+    # next call reconnects (with a fresh HELLO/PING).
     def command(self, *args: Any) -> Any:
         reader = self._ensure()
         assert self._sock is not None
-        self._sock.sendall(encode_command(*args))
-        return _parse(reader)
+        payload = encode_command(*args)
+        try:
+            self._sock.sendall(payload)
+            return _parse(reader)
+        except RespError:
+            raise
+        except BaseException:
+            self.close()
+            raise
 
     def pipeline(self, commands: list[tuple]) -> list[Any]:
         """Send all commands in one write, then read all replies."""
@@ -385,71 +381,29 @@ class RedisClient:
             return []
         reader = self._ensure()
         assert self._sock is not None
-        self._sock.sendall(b"".join(encode_command(*c) for c in commands))
-        out = []
-        for _ in commands:
-            try:
-                out.append(_parse(reader))
-            except RespError as e:
-                out.append(e)
-        return out
+        payload = b"".join(encode_command(*c) for c in commands)
+        try:
+            self._sock.sendall(payload)
+            out = []
+            for _ in commands:
+                try:
+                    out.append(_parse(reader))
+                except RespError as e:
+                    out.append(e)
+            return out
+        except BaseException:
+            self.close()
+            raise
 
     def pipeline_checked(self, commands: list[tuple]) -> list[Any]:
-        """``pipeline`` for WRITERS: every error reply is handled, not
-        dropped. MOVED/ASK redirects are replayed on the target (a
-        batch write racing a reshard must land every row — silently
-        discarding the RespError entries ``pipeline`` returns would
-        lose exactly the resharded keys); any other error raises, so a
-        failed write fails the Spark task instead of reporting a
-        phantom success. The read-side callers that legitimately map
-        errors to defaults (hgetall_pipelined's wrong-type → {}) keep
-        using raw ``pipeline``."""
-        out: list[Any] = []
-        retry: dict[tuple, list[tuple[int, tuple, str]]] = {}
-        for i, (cmd, reply) in enumerate(
-            zip(commands, self.pipeline(commands))
-        ):
+        """``pipeline`` for WRITERS: MOVED/ASK redirects are replayed
+        on their target (a batch write racing a reshard must land every
+        row) and any other error raises, so a failed write fails the
+        Spark task instead of reporting a phantom success."""
+        out = self._pipeline_redirected(commands)
+        for reply in out:
             if isinstance(reply, RespError):
-                red = _redirect_of(reply)
-                if red is None:
-                    raise reply
-                kind, host, port = red
-                # Group for a per-target re-pipeline: a writer batch
-                # usually targets ONE key (zset/stream sinks), so a
-                # reshard MOVEDs the whole batch — replaying it one
-                # serial round trip per command would be batch_size×
-                # the intended latency.
-                retry.setdefault((host, port), []).append((i, cmd, kind))
-                reply = None
-            out.append(reply)
-        for (host, port), items in retry.items():
-            tgt = self._redirect_client(host, port)
-            wire: list[tuple] = []
-            for _i, cmd, kind in items:
-                if kind == "ASK":
-                    # ASKING authorizes exactly the next command, so
-                    # it is interleaved per ASK-redirected command
-                    # within the one pipeline.
-                    wire.append(("ASKING",))
-                wire.append(cmd)
-            replies = iter(tgt.pipeline(wire))
-            for i, cmd, kind in items:
-                if kind == "ASK":
-                    ack = next(replies)  # the ASKING +OK
-                    if isinstance(ack, RespError):
-                        # e.g. replayed against a non-cluster node
-                        # ("cluster support disabled") — diagnose at
-                        # the ASKING step, not one reply later
-                        # (ADVICE r14).
-                        raise ack
-                r = next(replies)
-                if isinstance(r, RespError):
-                    red2 = _redirect_of(r)
-                    if red2 is None:
-                        raise r
-                    # slot moved again mid-replay: per-command follow
-                    r = self.command_redirected(*cmd, seed=red2)
-                out[i] = r
+                raise reply
         return out
 
     # -- convenience wrappers --------------------------------------------------
@@ -465,9 +419,16 @@ class RedisClient:
     # overlaps a reshard sees these on its GET/MGET enrichment — the
     # scan itself is node-local and never redirects. The reference
     # engine has no cluster support at all (a single global socket,
-    # ``redduck_extension.cpp:44-52``); this follows the standard
-    # cluster-client contract so the kv/get paths survive live
-    # resharding.
+    # ``redduck_extension.cpp:44-52``).
+    #
+    # ``_pipeline_redirected`` is the one follower: it replays every
+    # redirected command in one pipeline per target per hop (ASKING
+    # just before each ASK-redirected one), for at most MAX_REDIRECTS
+    # hops, and hands back each command's reply or non-redirect error.
+    # The callers only choose what an error means:
+    # ``pipeline_checked`` and ``command_redirected`` raise it, ``mget``
+    # maps WRONGTYPE to None and raises the rest, ``hgetall_pipelined``
+    # maps every error to {}. A redirect loop raises from all of them.
 
     def _redirect_client(self, host: str, port: int) -> "RedisClient":
         """Pooled connection to a redirect target (a long scan hitting
@@ -482,44 +443,52 @@ class RedisClient:
             self._redirect_pool[(host, port)] = tgt
         return tgt
 
-    def command_redirected(
-        self,
-        *args: Any,
-        max_redirects: int = 5,
-        seed: tuple[str, str, int] | None = None,
-    ) -> Any:
-        """``command`` that follows MOVED/ASK redirects, bounded by
-        ``max_redirects`` hops (a moved slot can move again).
+    def _pipeline_redirected(self, commands: list[tuple]) -> list[Any]:
+        """``pipeline`` that follows MOVED/ASK: each reply, or the
+        command's non-redirect ``RespError`` (a failed ASKING counts as
+        the command's error). Raises ``RespProtocolError`` when a
+        command is still redirected after ``MAX_REDIRECTS`` hops."""
+        out = self.pipeline(commands)
+        todo = [
+            (i, red) for i, r in enumerate(out)
+            if isinstance(r, RespError) and (red := _redirect_of(r))
+        ]
+        for _ in range(MAX_REDIRECTS):
+            if not todo:
+                break
+            by_target: dict[tuple[str, int], list[tuple[int, bool]]] = {}
+            for i, (kind, host, port) in todo:
+                by_target.setdefault((host, port), []).append((i, kind == "ASK"))
+            todo = []
+            for (host, port), items in by_target.items():
+                wire: list[tuple] = []
+                for i, ask in items:
+                    if ask:
+                        wire.append(("ASKING",))
+                    wire.append(commands[i])
+                replies = iter(self._redirect_client(host, port).pipeline(wire))
+                for i, ask in items:
+                    ack = next(replies) if ask else None
+                    r = next(replies)
+                    if isinstance(ack, RespError):
+                        out[i] = ack
+                    elif isinstance(r, RespError) and (red := _redirect_of(r)):
+                        todo.append((i, red))
+                    else:
+                        out[i] = r
+        if todo:
+            raise RespProtocolError(
+                f"redirect loop: >{MAX_REDIRECTS} MOVED/ASK hops for "
+                f"{commands[todo[0][0]][0]!r}"
+            )
+        return out
 
-        ``seed`` is an already-parsed redirect (kind, host, port) from
-        an error the CALLER received — the first attempt then goes
-        straight to the target instead of replaying the command on
-        this node for a guaranteed second redirect (one wasted round
-        trip per key on a bulk recovery)."""
-        client: RedisClient = self
-        asking = False
-        if seed is not None:
-            kind, host, port = seed
-            client = self._redirect_client(host, port)
-            asking = kind == "ASK"
-        for _ in range(max_redirects + 1):
-            try:
-                if asking:
-                    # ASK is one-request-only: ASKING must precede THIS
-                    # command on the target connection every time.
-                    client.command("ASKING")
-                return client.command(*args)
-            except RespError as e:
-                red = _redirect_of(e)
-                if red is None:
-                    raise
-                kind, host, port = red
-                client = self._redirect_client(host, port)
-                asking = kind == "ASK"
-        raise RespProtocolError(
-            f"redirect loop: >{max_redirects} MOVED/ASK hops for "
-            f"{args[0]!r}"
-        )
+    def command_redirected(self, *args: Any) -> Any:
+        """``command`` that follows MOVED/ASK redirects."""
+        (reply,) = self._pipeline_redirected([args])
+        if isinstance(reply, RespError):
+            raise reply
+        return reply
 
     def get(self, key: str) -> str | None:
         return _as_str(self.command_redirected("GET", key))
@@ -527,77 +496,42 @@ class RedisClient:
     def mget(self, keys: list[str]) -> list[str | None]:
         if not keys:
             return []
-        try:
-            if self._mget_crossslot and len(keys) > 1:
-                # CROSSSLOT is a property of the command pattern, not
-                # of specific keys: once this connection's multi-key
-                # MGET has been refused, every later scan page would
-                # fail the same way — skip the guaranteed-failed round
-                # trip and go straight to the per-key path below.
-                raise RespError("CROSSSLOT memoized")
-            return [_as_str(v) for v in self.command("MGET", *keys)]
-        except RespError as e:
-            if not _is_cluster_multikey_error(e):
-                raise
-            if str(e).startswith("CROSSSLOT"):
-                self._mget_crossslot = True
-            # Cluster recovery. A real cluster answers a multi-slot
-            # MGET with CROSSSLOT (virtually always for a SCAN page),
-            # TRYAGAIN for keys split mid-migration, or MOVED when the
-            # whole batch's slot resharded. Re-fetch per key: one
-            # pipelined GET round trip here, then SEEDED redirected
-            # singles for exactly the keys that moved — the per-slot
-            # split real cluster clients perform, specialized to the
-            # fetch path.
-            replies = self.pipeline([("GET", k) for k in keys])
-            out: list[str | None] = []
-            for k, r in zip(keys, replies):
-                if isinstance(r, RespError):
-                    red = _redirect_of(r)
-                    if red is not None:
-                        try:
-                            r = self.command_redirected("GET", k, seed=red)
-                        except RespError as e2:
-                            if not _is_wrongtype(e2):
-                                raise
-                            r = None  # non-string on its new owner
-                    elif _is_wrongtype(r):
-                        # MGET yields nil for non-string keys; the
-                        # per-key GET must not be stricter than the
-                        # fast path it replaces.
-                        r = None
-                    else:
-                        raise r
-                out.append(_as_str(r))
-            return out
+        # CROSSSLOT is a property of the command pattern, not of the
+        # keys: once this connection's multi-key MGET has been refused,
+        # later pages skip the guaranteed-failed round trip.
+        if not (self._mget_crossslot and len(keys) > 1):
+            try:
+                return [_as_str(v) for v in self.command("MGET", *keys)]
+            except RespError as e:
+                # A real cluster answers a multi-slot MGET with
+                # CROSSSLOT (virtually every SCAN page), TRYAGAIN for
+                # keys split mid-migration, or MOVED/ASK when the
+                # batch's slot is elsewhere: all recover per key below.
+                msg = str(e)
+                if msg.startswith("CROSSSLOT"):
+                    self._mget_crossslot = True
+                elif not msg.startswith("TRYAGAIN") and _redirect_of(e) is None:
+                    raise
+        out: list[str | None] = []
+        for r in self._pipeline_redirected([("GET", k) for k in keys]):
+            if isinstance(r, RespError):
+                # MGET yields nil for a non-string key; the per-key GET
+                # must not be stricter than the fast path it replaces.
+                if not str(r).startswith("WRONGTYPE"):
+                    raise r
+                r = None
+            out.append(_as_str(r))
+        return out
 
     def hgetall(self, key: str) -> dict[str, str]:
         return _pairs(self.command("HGETALL", key))
 
     def hgetall_pipelined(self, keys: list[str]) -> list[dict[str, str]]:
-        replies = self.pipeline([("HGETALL", k) for k in keys])
-        out = []
-        for key, reply in zip(keys, replies):
-            if isinstance(reply, RespError):
-                # Cluster redirect: the hash moved — fetch it from its
-                # new owner instead of misreporting {} (data loss).
-                # Every OTHER error keeps the documented wrong-type /
-                # missing-key → {} mapping, INCLUDING on the redirect
-                # target (a key recreated as a string on its new owner
-                # must map to {} exactly as it would have locally).
-                red = _redirect_of(reply)
-                if red is not None:
-                    try:
-                        reply = self.command_redirected(
-                            "HGETALL", key, seed=red
-                        )
-                    except RespError:
-                        # same error→{} contract on the new owner
-                        reply = None
-                else:
-                    reply = None
-            out.append(_pairs(reply))
-        return out
+        """One dict per key; a moved hash is fetched from its new owner,
+        and any error (wrong type, here or on the new owner) reads as
+        {}."""
+        replies = self._pipeline_redirected([("HGETALL", k) for k in keys])
+        return [_pairs(None if isinstance(r, RespError) else r) for r in replies]
 
     def type_of(self, key: str) -> str:
         return _as_str(self.command("TYPE", key))

@@ -520,37 +520,46 @@ def test_fake_set_replaces_any_key_type():
             assert c.command("TYPE", "tt:1") == "string"
 
 
-def test_pipeline_checked_surfaces_asking_errors():
+_CALLERS = {
+    "pipeline_checked": lambda c, k: c.pipeline_checked([("GET", k)]),
+    "command_redirected": lambda c, k: c.command_redirected("GET", k),
+    "mget": lambda c, k: c.mget([k, k + ":other"]),
+    "hgetall_pipelined": lambda c, k: c.hgetall_pipelined([k]),
+}
+
+
+@pytest.mark.parametrize("caller", sorted(_CALLERS))
+def test_pipeline_checked_surfaces_asking_errors(monkeypatch, caller):
     """When the ASK target rejects ASKING itself ('-ERR This instance
     has cluster support disabled', as a standalone node does), the
-    replay must raise instead of silently consuming the error and
-    trusting the following command reply."""
+    replay must not consume the error and trust the following command
+    reply: the failed ASKING is the command's error, which
+    pipeline_checked, command_redirected and mget raise and
+    hgetall_pipelined reads as {}. An a <-> b MOVED ping-pong raises
+    "redirect loop" from all four, never None or {}."""
     from duckdb_redis_olap_scanner_spark import testing as T
 
-    real_dispatch = T._Handler._dispatch
-
-    def asking_disabled(self, store, cmd):
-        if cmd and cmd[0].upper() == "ASKING":
-            return b"-ERR This instance has cluster support disabled\r\n"
-        return real_dispatch(self, store, cmd)
-
+    dispatch = T._Handler._dispatch
+    run = _CALLERS[caller]
     with FakeRedisServer() as a, FakeRedisServer() as b:
-        a.store.ask["askerr:1"] = (b.host, b.port)
-        # only b (the ASK target) refuses ASKING
-        orig = T._Handler._dispatch
 
-        def routed(self, store, cmd):
-            if store is b.store:
-                return asking_disabled(self, store, cmd)
-            return orig(self, store, cmd)
+        def asking_disabled_on_b(self, store, cmd):
+            if store is b.store and cmd[0].upper() == "ASKING":
+                return b"-ERR This instance has cluster support disabled\r\n"
+            return dispatch(self, store, cmd)
 
-        T._Handler._dispatch = routed
-        try:
-            with RedisClient(a.host, a.port) as c:
+        monkeypatch.setattr(T._Handler, "_dispatch", asking_disabled_on_b)
+        a.store.ask["pe:ask"] = (b.host, b.port)
+        a.store.moved["pe:loop"] = (b.host, b.port)
+        b.store.moved["pe:loop"] = (a.host, a.port)
+        with RedisClient(a.host, a.port) as c:
+            if caller == "hgetall_pipelined":
+                assert run(c, "pe:ask") == [{}]
+            else:
                 with pytest.raises(RespError, match="cluster support"):
-                    c.pipeline_checked([("SET", "askerr:1", "v")])
-        finally:
-            T._Handler._dispatch = orig
+                    run(c, "pe:ask")
+            with pytest.raises(RespProtocolError, match="redirect loop"):
+                run(c, "pe:loop")
 
 
 def test_cluster_scan_exactly_once_during_migration(spark):
@@ -595,3 +604,94 @@ def test_cluster_scan_exactly_once_during_migration(spark):
     finally:
         for n in nodes:
             n.stop()
+
+
+@pytest.fixture
+def round_trips(monkeypatch):
+    """Round trips per (client port, kind), counted by wrapping
+    ``RedisClient.pipeline``/``command`` at class level the way the
+    benchmark's tracer does. Connection handshakes are not counted."""
+    from collections import Counter
+
+    trips: Counter = Counter()
+    command, pipeline = RedisClient.command, RedisClient.pipeline
+
+    def counting_command(self, *args):
+        if str(args[0]).upper() not in ("PING", "HELLO"):
+            trips[self.port, "command"] += 1
+        return command(self, *args)
+
+    def counting_pipeline(self, commands):
+        trips[self.port, "pipeline"] += 1
+        return pipeline(self, commands)
+
+    monkeypatch.setattr(RedisClient, "command", counting_command)
+    monkeypatch.setattr(RedisClient, "pipeline", counting_pipeline)
+    return trips
+
+
+@pytest.mark.parametrize("reader", ["mget", "hgetall_pipelined"])
+def test_moved_storm_read_paths_cost_one_pipeline_per_target_per_hop(
+    reader, round_trips
+):
+    """A page of 300 keys on node a: a third MOVED to b, a third ASK
+    to c (importing on c), and a few of b's keys ASK on to c (two
+    hops). The values come back exact and in key order, for one GET
+    or HGETALL pipeline on a, then one pipeline per target per hop:
+    b and c on the first hop, c again on the second."""
+    with FakeRedisServer() as a, FakeRedisServer() as b, \
+            FakeRedisServer() as c_srv:
+        keys = [f"ms:{i:03d}" for i in range(300)]
+        owner = {}
+        for i, k in enumerate(keys):
+            if i % 3 == 1:
+                a.store.moved[k] = (b.host, b.port)
+                owner[k] = b
+                if i % 30 == 1:
+                    b.store.ask[k] = (c_srv.host, c_srv.port)
+                    c_srv.store.importing[k] = (b.host, b.port)
+                    owner[k] = c_srv
+            elif i % 3 == 2:
+                a.store.ask[k] = (c_srv.host, c_srv.port)
+                c_srv.store.importing[k] = (a.host, a.port)
+                owner[k] = c_srv
+            else:
+                owner[k] = a
+        if reader == "mget":
+            for k in keys:
+                owner[k].seed_strings({k: f"v:{k}"})
+            a.store.crossslot_mget = True
+            want = [f"v:{k}" for k in keys]
+            first = {(a.port, "command"): 1}  # the refused MGET
+        else:
+            for k in keys:
+                owner[k].seed_hashes({k: {"f": f"v:{k}"}})
+            want = [{"f": f"v:{k}"} for k in keys]
+            first = {}
+        with RedisClient(a.host, a.port) as c:
+            assert getattr(c, reader)(keys) == want
+        assert dict(round_trips) == {
+            **first,
+            (a.port, "pipeline"): 1,
+            (b.port, "pipeline"): 1,
+            (c_srv.port, "pipeline"): 2,
+        }
+
+
+def test_moved_twice_write_batch_costs_one_pipeline_per_hop(round_trips):
+    """A pipeline_checked batch of 50 ZADDs whose key moved a -> b -> c
+    lands on c for one pipeline on each node."""
+    with FakeRedisServer() as a, FakeRedisServer() as b, \
+            FakeRedisServer() as c_srv:
+        a.store.moved["zz:key"] = (b.host, b.port)
+        b.store.moved["zz:key"] = (c_srv.host, c_srv.port)
+        cmds = [("ZADD", "zz:key", str(float(i)), f"m{i}") for i in range(50)]
+        with RedisClient(a.host, a.port) as c:
+            assert c.pipeline_checked(cmds) == [1] * 50
+        assert len(c_srv.store.zsets["zz:key"]) == 50
+        assert "zz:key" not in a.store.zsets and "zz:key" not in b.store.zsets
+        assert dict(round_trips) == {
+            (a.port, "pipeline"): 1,
+            (b.port, "pipeline"): 1,
+            (c_srv.port, "pipeline"): 1,
+        }

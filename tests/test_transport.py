@@ -197,3 +197,72 @@ def test_resp3_parse_branches():
         with pytest.raises(RespProtocolError):
             parse(wire)
     assert parse(b"*3\r\n$3\r\nfoo\r\n$-1\r\n$0\r\n\r\n") == [b"foo", None, b""]
+
+
+@pytest.mark.parametrize("fault", ["stall", "reset"])
+def test_retry_after_broken_reply_reads_its_own_reply(fault):
+    """A reply cut short must not leak into the next command. The
+    server answers ``GET a`` with the first bytes of ``$5\\r\\nfirst``,
+    then either stalls past the client's timeout (cut before the first
+    CRLF) and sends the rest, or resets the connection mid bulk string.
+    The caller's retry ``GET b`` must read ``second``, not the rest of
+    the old reply."""
+    import socket
+    import socketserver
+    import struct
+    import threading
+    import time
+
+    from duckdb_redis_olap_scanner_spark.transport.resp import _SocketReader
+
+    values = {"a": b"first", "b": b"second"}
+
+    class Faulty(socketserver.BaseRequestHandler):
+        def handle(self):
+            reader = _SocketReader(self.request)
+            while True:
+                try:
+                    n = int(reader.read_line()[1:])
+                    args = [
+                        reader.read_exact(int(reader.read_line()[1:])).decode()
+                        for _ in range(n)
+                    ]
+                except Exception:
+                    return
+                if args[0] == "PING":
+                    self.request.sendall(b"+PONG\r\n")
+                elif args[1] == "a" and fault == "stall":
+                    self.request.sendall(b"$5\r")
+                    time.sleep(0.75)
+                    try:
+                        self.request.sendall(b"\nfirst\r\n")
+                    except OSError:
+                        return
+                elif args[1] == "a":
+                    self.request.sendall(b"$5\r\nfi")
+                    self.request.setsockopt(
+                        socket.SOL_SOCKET, socket.SO_LINGER,
+                        struct.pack("ii", 1, 0),
+                    )
+                    self.request.close()  # RST
+                    return
+                else:
+                    v = values[args[1]]
+                    self.request.sendall(b"$%d\r\n%s\r\n" % (len(v), v))
+
+    class Srv(socketserver.ThreadingTCPServer):
+        allow_reuse_address = True
+        daemon_threads = True
+
+    srv = Srv(("127.0.0.1", 0), Faulty)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        host, port = srv.server_address
+        with RedisClient(host, port, timeout=0.5) as c:
+            with pytest.raises((OSError, RespProtocolError)):
+                c.command("GET", "a")
+            assert c.command("GET", "b") == b"second"
+            assert c.command("GET", "b") == b"second"
+    finally:
+        srv.shutdown()
+        srv.server_close()
